@@ -91,7 +91,14 @@ def _hook_parents(edges: DataFrame) -> DataFrame:
     )
 
 
-def _pointer_jump(parents: DataFrame, max_iters: int = 64) -> DataFrame:
+#: chained-jump shape: probes per job, jobs before falling back to doubling
+_CHAIN_STEPS = 8
+_CHAIN_PASSES = 2
+#: path-doubling iteration cap (2^64 covers any chain depth)
+_MAX_JUMP_ITERS = 64
+
+
+def _pointer_jump(parents: DataFrame) -> DataFrame:
     """Iterate comp <- parent(comp) by path doubling until fixpoint.
 
     Replaces the reference's sequential time-forward PQ walk
@@ -107,7 +114,7 @@ def _pointer_jump(parents: DataFrame, max_iters: int = 64) -> DataFrame:
     """
     p = parents
     prev_cache: DataFrame | None = None
-    for _ in range(max_iters):
+    for _ in range(_MAX_JUMP_ITERS):
         q = p.select(F.col("node").alias("__qn"), F.col("comp").alias("__qc"))
         joined = (
             p.join(q, on=p["comp"] == q["__qn"], how="left")
@@ -134,11 +141,13 @@ def _pointer_jump(parents: DataFrame, max_iters: int = 64) -> DataFrame:
     return p
 
 
-def _release_jump_cache(df: DataFrame) -> None:
+def _release_jump_cache(df: DataFrame | None) -> None:
     """Unpersist a round-labels table: drops the DataFrame's own storage AND
     the internal cache a chained-jump projection is backed by (attached as
     ``_emcc_backing_cache`` — the projection itself is never persisted, so a
-    plain unpersist() on it would leak the backing table)."""
+    plain unpersist() on it would leak the backing table). None is a no-op."""
+    if df is None:
+        return
     backing = getattr(df, "_emcc_backing_cache", None)
     if backing is not None:
         backing.unpersist()
@@ -245,53 +254,41 @@ def _pointer_jump_targets(
 
 
 def _pointer_jump_chained(
-    parents: DataFrame,
-    *,
-    steps: int = 8,
-    passes: int = 2,
-    broadcast_parents: bool = True,
-    max_iters: int = 64,
-    targets: DataFrame | None = None,
+    parents: DataFrame, targets: DataFrame
 ) -> DataFrame:
-    """Resolve parent chains by `steps` chained probes of the ORIGINAL
-    depth-1 map inside ONE Spark job.
+    """Resolve parent chains by K = `_CHAIN_STEPS` chained probes of the
+    ORIGINAL depth-1 map inside ONE Spark job.
 
     The depth-1 map P is fixed, so comp_{k+1}(x) = P[comp_k(x)] composed
-    `steps` times is `steps` joins against the SAME relation — when P fits
-    the broadcast threshold these become `steps` broadcast hash probes in a
+    K times is K joins against the SAME relation — when P fits
+    the broadcast threshold these become K broadcast hash probes in a
     single whole-stage-codegen map over the n-row table: one broadcast build,
     ZERO shuffles, no per-iteration driver round-trips (path doubling costs a
     materialize + moved-check job per log-step; this is the dominant
     superstep phase at bench scale). Convergence check: every comp must be a
     root of P (broadcast anti-join against the small root set). Hook forests
     are shallow on real graphs (depth <= 8 measured on rMAT s23); after
-    `passes` chains (depth steps*passes) any pathological remainder (path
-    graphs) falls back to `_pointer_jump` doubling, keeping the O(log depth)
-    worst case.
+    `_CHAIN_PASSES` chains any pathological remainder (path graphs) falls
+    back to `_pointer_jump` doubling, keeping the O(log depth) worst case.
+    The same chain as shuffle joins measured SLOWER than plain path doubling
+    at every tested shape (BENCH/jump_ab.json), so the probes are always
+    broadcast.
 
-    ``broadcast_parents=False`` keeps the same probe chain as shuffle joins;
-    measured SLOWER than plain path doubling at every tested shape
-    (BENCH/jump_ab.json), so the CC driver only calls this with broadcast
-    probes — the shuffle variant remains for the A/B bench and as the
-    explicit fallback shape.
+    ``targets``: the distinct comp values as a (node) column. The probe map
+    only needs rows whose node OCCURS as a comp value (every probe key is a
+    comp value by induction) — on hub-heavy graphs this shrinks the
+    broadcast build ~6x (773k of 4.6M rows on the s23 bench graph).
     """
-    # the probe map only needs rows whose node actually OCCURS as a comp
-    # value (every probe key is a comp value by induction) — on hub-heavy
-    # graphs this shrinks the broadcast build ~6x (773k of 4.6M rows on the
-    # s23 bench graph); non-root rows only would not shrink it (most nodes
-    # are non-roots), target-filtering does. The dispatcher passes its
-    # already-computed target set in; direct/bench callers let us derive it.
-    if targets is None:
-        targets = parents.select(F.col("comp").alias("node")).distinct()
-    P = parents.join(targets, on="node", how="left_semi").select(
-        F.col("node").alias("__pn"), F.col("comp").alias("__pc")
+    Pb = F.broadcast(
+        parents.join(targets, on="node", how="left_semi").select(
+            F.col("node").alias("__pn"), F.col("comp").alias("__pc")
+        )
     )
-    Pb = F.broadcast(P) if broadcast_parents else P
     cur = parents
     prev_cache: DataFrame | None = None
-    for _ in range(passes):
+    for _ in range(_CHAIN_PASSES):
         c = cur.select("node", "comp")
-        for _ in range(steps):
+        for _ in range(_CHAIN_STEPS):
             c = c.join(Pb, on=c["comp"] == Pb["__pn"], how="left").select(
                 "node", F.coalesce("__pc", "comp").alias("comp")
             )
@@ -334,8 +331,8 @@ def _pointer_jump_chained(
             out = cur.select("node", "comp")
             out._emcc_backing_cache = prev_cache
             return out
-    # pathological depth (> steps*passes): finish with path doubling
-    out = _pointer_jump(cur.select("node", "comp"), max_iters)
+    # pathological depth (> K * _CHAIN_PASSES): finish with path doubling
+    out = _pointer_jump(cur.select("node", "comp"))
     if prev_cache is not None:
         prev_cache.unpersist()
     return out
@@ -380,8 +377,7 @@ def _dispatch_jump(
     """Pick the pointer-jump plan by the measured size rule and return the
     materialized (node, comp) root labels.
 
-    The plans and their crossovers (tools/bench_jump.py, BENCH/jump_ab.json,
-    tools/profile_superstep.py):
+    The plans and their crossovers (BENCH/jump_ab.json, BENCH/scaling.json):
     * ``n <= jump_local_threshold``: single-task numpy path doubling — one
       task beats per-job scheduling overhead below ~2M rows;
     * ``|distinct comps| <= jump_local_threshold``: targets-reduced jump —
@@ -405,8 +401,6 @@ def _dispatch_jump(
 
     Every branch returns a persisted+materialized table; release it with
     `_release_jump_cache` (the chained branch hands its backing cache along).
-    Shared by the CC driver loop and tools/profile_superstep.py so profiles
-    measure the plan production runs.
     """
     if n_before <= jump_local_threshold:
         round_labels = _pointer_jump_local(parents).persist()
@@ -423,15 +417,11 @@ def _dispatch_jump(
     if n_before <= broadcast_threshold_rows:
         # self-cached + counted; single-job broadcast probes while the
         # parent table fits the broadcast budget
-        return _pointer_jump_chained(
-            parents, broadcast_parents=True, targets=targets
-        )
+        return _pointer_jump_chained(parents, targets)
     return _pointer_jump(parents)
 
 
-def _union_find_finish(
-    edges: DataFrame, single_partition: str = "coalesce"
-) -> DataFrame:
+def _union_find_finish(edges: DataFrame) -> DataFrame:
     """Solve the (small) contracted edge table with the vectorized numpy CC
     kernel in one executor task; returns the (node, comp) star map.
 
@@ -442,19 +432,16 @@ def _union_find_finish(
     multiple seconds, and no driver round-trip. Roots are min members,
     matching the distributed rounds.
 
-    ``single_partition="coalesce"`` (default) is for a MATERIALIZED edge
-    table (localCheckpoint- or parquet-backed): the kernel task reads the
-    stored blocks directly, skipping the repartition shuffle stage (one
-    fewer fixed-latency stage in the serial finish tail). The fused finish
-    passes ``"shuffle"`` instead, because there its input is the LAZY
-    contract plan: repartition(1) keeps the contract running at full
-    parallelism and funnels only its (small) output into the kernel task.
+    The edge table is always MATERIALIZED here (localCheckpoint- or
+    parquet-backed), so the kernel task reads the stored blocks directly via
+    coalesce(1), skipping the repartition shuffle stage (one fewer
+    fixed-latency stage in the serial finish tail).
     """
     from ..operators.numpy_cc import solve_cc_numpy
 
     return _single_task_map(
         edges.select("src", "dst"), solve_cc_numpy, ("node", "comp"),
-        single_partition=single_partition,
+        single_partition="coalesce",
     )
 
 
@@ -470,11 +457,8 @@ def connected_components(
     policy: "Policy | None" = None,
     local_solve_bucket_width: int = 0,
     jump_local_threshold: int = 2_000_000,
-    heavy_hitter_split: bool = True,
     hub_seeds: list[int] | None = None,
     seed: int = 42,
-    fuse_finish: bool = False,
-    profile_finish: bool = False,
 ) -> DataFrame:
     """Exact CC labels (node, comp) with comp = min member of the component.
 
@@ -489,7 +473,8 @@ def connected_components(
     capped at 16M — e.g. ~524k rows on 1GB executors, ~2M on 4GB), so the
     explicit hint can never exceed what the participating heaps hold; the
     ``spark.emcc.broadcast.maxRows`` conf pins it explicitly. Above the
-    threshold AQE still upgrades joins it measures as small enough.
+    threshold AQE still upgrades joins it measures as small enough, and
+    detected mega-hubs take the heavy-hitter split relabel.
     ``checkpointer``: if given, per-round edge/label tables are persisted and
     a killed run resumes from the last completed round.
     ``policy``: optional plans.policy.Policy overriding the two thresholds and
@@ -510,12 +495,6 @@ def connected_components(
     directly from this list, skipping the degree-scan detect job entirely;
     later rounds re-detect from the (contracted) degrees as usual, since
     contraction renames nodes.
-    ``fuse_finish``: opt-in — when a round's stats job predicts the NEXT
-    contracted graph fits the semi-external kernel, pipe the contraction
-    straight into the one-task finish inside the same job instead of
-    materializing it first (one fewer job + localCheckpoint + broadcast
-    rebuild). Default False by measured A/B (BENCH/fuse_ab.json): on this
-    bench the unfused tail's materialized input beats the saved job.
 
     On convergence ``metrics.n_components`` holds the EXACT component count,
     tracked as a free by-product (root-count aggregates riding the existing
@@ -591,9 +570,9 @@ def connected_components(
     # rides a job the solve already runs: hook roots satisfy comp == node
     # (min-hook ⇒ parent ≤ node, no cycles) and jumping never changes the
     # root set, so R is one plain SUM(node = comp) in the existing stats
-    # agg; a star round removes exactly its hooked sources (break_paths
-    # guarantees sources are never centers), so comp_count -= hook_count
-    # (already counted); the finish kernel's (n_fin, R_fin) ride the
+    # agg; a star round's map covers only its hooked sources, none a root
+    # (break_paths guarantees sources are never centers), so R = 0 and n is
+    # the hook count (already counted); the finish kernel's (R, n) ride the
     # compose/checkpoint job as an Observation. This replaces the separate
     # countDistinct scan callers ran for n_components — one fewer n-row job
     # in the cc_full tail (VERDICT r4 #1b).
@@ -604,305 +583,180 @@ def connected_components(
         if m == 0:
             break
         t0 = time.time()
+        first_round = labels is None
 
         if m <= small_graph_threshold:
             # --- semi-external finish: one-task vectorized CC solve ---
-            local_labels = _union_find_finish(e)
-            obs_fin = Observation()
-            local_labels = local_labels.observe(
-                obs_fin,
-                F.count(F.lit(1)).alias("n_fin"),
-                F.sum(
-                    (F.col("node") == F.col("comp")).cast("long")
-                ).alias("r_fin"),
+            obs = Observation()
+            round_labels = _union_find_finish(e).observe(
+                obs,
+                F.count(F.lit(1)).alias("n"),
+                F.sum((F.col("node") == F.col("comp")).cast("long")).alias("r"),
             )
-            kernel_wall = compose_wall = None
-            if profile_finish:
-                # attribution mode (tools/profile_cc_tail.py): materialize
-                # the kernel output first so its wall separates from the
-                # compose scan. Costs one extra tiny job vs the production
-                # single-job finish — attribution only, never the bench path.
-                t_k = time.time()
-                local_labels = local_labels.localCheckpoint(eager=True)
-                kernel_wall = time.time() - t_k
-            t_c = time.time()
-            if labels is None:
-                labels = local_labels
-            else:
-                # the local map is small by construction -> broadcast compose
-                labels = compose_labels(labels, local_labels, broadcast_inner=True)
+            # the local map is small by construction -> broadcast compose;
             # materialize before dropping the cached edge table the kernel
             # task reads from
-            labels = labels.localCheckpoint(eager=True)
-            if profile_finish:
-                compose_wall = time.time() - t_c
-            if comp_track:
-                try:
-                    n_fin = int(obs_fin.get["n_fin"])
-                    r_fin = int(obs_fin.get["r_fin"])
-                    comp_count = (
-                        r_fin
-                        if comp_count is None
-                        else r_fin + comp_count - n_fin
-                    )
-                except Exception:
-                    comp_count = None  # observation optimized away (rare)
-            if held_labels_cache is not None:
-                _release_jump_cache(held_labels_cache)
-                held_labels_cache = None
-            fin_rec = {"round": rnd, "kind": "unionfind_finish", "m": m,
-                       "wall_sec": time.time() - t0}
-            if profile_finish:
-                fin_rec["kernel_wall"] = kernel_wall
-                fin_rec["compose_wall"] = compose_wall
-            metrics.add(**fin_rec)
+            labels = (
+                round_labels
+                if first_round
+                else compose_labels(labels, round_labels, broadcast_inner=True)
+            ).localCheckpoint(eager=True)
+            try:
+                roots = (int(obs.get["r"]), int(obs.get["n"]))
+            except Exception:
+                comp_track = False  # observation optimized away (rare)
+            metrics.add(round=rnd, kind="unionfind_finish", m=m,
+                        wall_sec=time.time() - t0)
             e.unpersist()
             m = 0
-            break
-
-        # --- one contraction superstep (boruvka or star, per policy) ---
-        strategy = "boruvka"
-        if policy is not None and n_prev is not None:
-            strategy = policy.contraction_strategy(n_prev, m)
-        if strategy == "star":
-            from .star_contraction import star_contraction_round
-
-            round_labels = star_contraction_round(
-                e, seed=seed + rnd
-            ).persist()
-            n_before = round_labels.count()
-            if comp_track and comp_count is not None:
-                # every hooked source stops being a component root; centers
-                # are never sources (break_paths), so the distinct-comp
-                # count drops by exactly the hook count
-                comp_count -= n_before
         else:
-            parents_full = _hook_parents(e).persist()
-            # ONE job fills the cache and returns both dispatch inputs:
-            # the node count (jumping preserves it) and the approximate
-            # distinct-comp count (picks the targets-reduced jump plan)
-            stats = parents_full.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.approx_count_distinct("comp").alias("t"),
-                F.sum(
-                    (F.col("node") == F.col("comp")).cast("long")
-                ).alias("r"),
-            ).collect()[0]
-            n_before, t_est = stats["n"], stats["t"]
-            if comp_track:
-                r_exact = int(stats["r"] or 0)
-                comp_count = (
-                    r_exact
-                    if comp_count is None
-                    else r_exact + comp_count - n_before
+            # --- one contraction superstep (boruvka or star, per policy) ---
+            strategy = "boruvka"
+            if policy is not None and n_prev is not None:
+                strategy = policy.contraction_strategy(n_prev, m)
+            if strategy == "star":
+                from .star_contraction import star_contraction_round
+
+                round_labels = star_contraction_round(
+                    e, seed=seed + rnd
+                ).persist()
+                n_before = round_labels.count()
+                roots = (0, n_before)
+            else:
+                parents_full = _hook_parents(e).persist()
+                # ONE job fills the cache and returns both dispatch inputs:
+                # the node count (jumping preserves it) and the approximate
+                # distinct-comp count (picks the targets-reduced jump plan)
+                stats = parents_full.agg(
+                    F.count(F.lit(1)).alias("n"),
+                    F.approx_count_distinct("comp").alias("t"),
+                    F.sum(
+                        (F.col("node") == F.col("comp")).cast("long")
+                    ).alias("r"),
+                ).collect()[0]
+                n_before, t_est = stats["n"], stats["t"]
+                roots = (int(stats["r"] or 0), n_before)
+                round_labels = _dispatch_jump(
+                    parents_full.select("node", "comp"), n_before, t_est=t_est,
+                    jump_local_threshold=jump_local_threshold,
+                    broadcast_threshold_rows=broadcast_threshold_rows,
                 )
-            parents = parents_full.select("node", "comp")
-            round_labels = _dispatch_jump(
-                parents, n_before, t_est=t_est,
-                jump_local_threshold=jump_local_threshold,
-                broadcast_threshold_rows=broadcast_threshold_rows,
-            )
 
-        do_broadcast = n_before <= broadcast_threshold_rows
-        heavy: list[tuple[int, int]] = []
-        hub_source: str | None = None
-        if strategy == "boruvka":
-            if heavy_hitter_split and not do_broadcast:
-                # skew trigger: a broadcast relabel has no shuffle to skew;
-                # on the shuffled path one mega-hub funnels its full degree
-                # into a single reducer. Detected hubs bypass the join via a
-                # literal-map fast path (joins.relabel_heavy_split) while
-                # AQE's skew-join splitting covers residual moderate skew.
-                # Measured A/B on mega-hub stars (tools/bench_salting.py,
-                # BENCH/salting.json): neutral at 10M leaves, ~7% faster at
-                # 30M — fires only beyond max(4m/partitions, 1M) degree.
-                if hub_seeds and rnd == start_round:
-                    # seeded by the online monitor: no detect job at all —
-                    # ids refer to the ORIGINAL graph, hence first round only
-                    hot_ids = [int(h) for h in hub_seeds][:1024]
-                    hub_source = "seeded"
-                else:
-                    # degree came free with the hook shuffle; the threshold
-                    # scan is one cheap job over the cached n-row parent table
-                    sp = int(
-                        spark.conf.get("spark.sql.shuffle.partitions", "200")
-                    )
-                    deg_thr = max(4 * m // max(sp, 1), 1_000_000)
-                    hot_ids = [
-                        r["node"]
-                        for r in parents_full.filter(F.col("deg") > deg_thr)
-                        .select("node")
-                        .limit(1024)
-                        .collect()
-                    ]
-                    hub_source = "scan" if hot_ids else None
-                if hot_ids:
-                    heavy = [
-                        (r["node"], r["comp"])
-                        for r in round_labels.filter(
-                            F.col("node").isin(hot_ids)
-                        ).collect()
-                    ]
-            parents_full.unpersist()
+            do_broadcast = n_before <= broadcast_threshold_rows
+            heavy: list[tuple[int, int]] = []
+            hub_source: str | None = None
+            if strategy == "boruvka":
+                if not do_broadcast:
+                    # skew trigger: a broadcast relabel has no shuffle to
+                    # skew; on the shuffled path one mega-hub funnels its
+                    # full degree into a single reducer. Detected hubs bypass
+                    # the join via a literal-map fast path
+                    # (joins.relabel_heavy_split) while AQE's skew-join
+                    # splitting covers residual moderate skew. Measured A/B
+                    # on mega-hub stars (BENCH/salting.json): neutral at 10M
+                    # leaves, ~7% faster at 30M — fires only beyond
+                    # max(4m/partitions, 1M) degree.
+                    if hub_seeds and rnd == start_round:
+                        # seeded by the online monitor: no detect job at
+                        # all — ids refer to the ORIGINAL graph, hence first
+                        # round only
+                        hot_ids = [int(h) for h in hub_seeds][:1024]
+                        hub_source = "seeded"
+                    else:
+                        # degree came free with the hook shuffle; the
+                        # threshold scan is one cheap job over the cached
+                        # n-row parent table
+                        sp = int(spark.conf.get(
+                            "spark.sql.shuffle.partitions", "200"
+                        ))
+                        deg_thr = max(4 * m // max(sp, 1), 1_000_000)
+                        hot_ids = [
+                            r["node"]
+                            for r in parents_full.filter(F.col("deg") > deg_thr)
+                            .select("node")
+                            .limit(1024)
+                            .collect()
+                        ]
+                        hub_source = "scan" if hot_ids else None
+                    if hot_ids:
+                        heavy = [
+                            (r["node"], r["comp"])
+                            for r in round_labels.filter(
+                                F.col("node").isin(hot_ids)
+                            ).collect()
+                        ]
+                parents_full.unpersist()
 
-        # --- fused finish (opt-in): contract straight into the kernel ---
-        # When the round's free stats job says the contracted graph will fit
-        # the semi-external kernel (t_est approximates its NODE count; the
-        # kernel is O(m) numpy either way, so a miss is slow-but-correct,
-        # never wrong), skip the per-round materialization entirely: the
-        # contract plan funnels through repartition(1) into the kernel task
-        # within the SAME job, and the final compose is the only n-row pass.
-        # vs the unfused tail this removes one full job + one small-table
-        # localCheckpoint + one broadcast rebuild — fixed serial cost.
-        # MEASURED default-off: an interleaved 4-pair A/B at local[8] on the
-        # 129M-edge rMAT s23 (BENCH/fuse_ab.json) gave fused 33.3s vs
-        # unfused 27.9s median — the saved job does not pay for losing the
-        # materialized (localCheckpoint) input that lets the kernel task
-        # read stored blocks, so the fusion is kept as an opt-in for
-        # workloads where round-tail materialization dominates (many tiny
-        # rounds). Guards: never under a checkpointer (resume needs the
-        # per-round tables), never on the last allowed round (max_rounds
-        # callers measure exactly-one-superstep), boruvka only (star rounds
-        # compute no t_est).
-        fuse_now = (
-            fuse_finish
-            and strategy == "boruvka"
-            and checkpointer is None
-            and rnd + 1 < max_rounds
-            and 0 < t_est <= small_graph_threshold
-        )
-        if fuse_now:
-            t_hookjump = time.time() - t0
-            t1 = time.time()
             e_next = contract(
                 e, round_labels, broadcast_labels=do_broadcast,
                 heavy_hitters=heavy,
             )
-            obs = Observation()
-            observed = e_next.observe(obs, F.count(F.lit(1)).alias("m_next"))
-            local_labels = _union_find_finish(
-                observed, single_partition="shuffle"
-            )
-            obs_fin = Observation()
-            local_labels = local_labels.observe(
-                obs_fin,
-                F.count(F.lit(1)).alias("n_fin"),
-                F.sum(
-                    (F.col("node") == F.col("comp")).cast("long")
-                ).alias("r_fin"),
-            )
-            mid = (
+            labels = (
                 round_labels
-                if labels is None
+                if first_round
                 else compose_labels(
                     labels, round_labels, broadcast_inner=do_broadcast
                 )
             )
-            labels = compose_labels(mid, local_labels, broadcast_inner=True)
-            labels = labels.localCheckpoint(eager=True)
-            try:
-                m_next = int(obs.get["m_next"])
-            except Exception:
-                # AQE can optimize the observed node out of the broadcast
-                # subtree (seen when the contraction empties the graph and
-                # empty-relation propagation eliminates the join); fall back
-                # to one count over the cached-input contract plan — rare,
-                # and trivial exactly when it happens
-                m_next = e_next.count()
-            metrics.add(
-                round=rnd, kind="boruvka_superstep", m=m, m_next=m_next,
-                n_nodes=n_before, wall_sec=t_hookjump,
-                edges_per_sec=m / max(t_hookjump, 1e-9),
-                broadcast=do_broadcast, n_heavy_hitters=len(heavy),
-                hub_source=hub_source, fused_finish=True,
-            )
-            metrics.add(
-                round=rnd + 1, kind="unionfind_finish", m=m_next,
-                wall_sec=time.time() - t1, fused=True,
-            )
-            if comp_track:
-                try:
-                    n_fin = int(obs_fin.get["n_fin"])
-                    r_fin = int(obs_fin.get["r_fin"])
-                    # comp_count already folded this round's hook/jump via
-                    # the stats update above; fold the kernel solve on top
-                    comp_count = r_fin + comp_count - n_fin
-                except Exception:
-                    comp_count = None
-            _release_jump_cache(round_labels)
-            if held_labels_cache is not None:
-                _release_jump_cache(held_labels_cache)
-                held_labels_cache = None
-            e.unpersist()
-            m = 0
-            break
 
-        e_next = contract(
-            e, round_labels, broadcast_labels=do_broadcast,
-            heavy_hitters=heavy,
-        )
-
-        first_round = labels is None
-        if first_round:
-            labels = round_labels
-        else:
-            labels = compose_labels(
-                labels, round_labels, broadcast_inner=do_broadcast
-            )
-
-        # m_next rides the checkpoint materialization job as an observed
-        # metric instead of a separate count() scan — one fewer job (and one
-        # fewer driver round-trip) per round, a pure serial-fraction saving
-        # (VERDICT r3 #2). Works on both tails: the parquet write and the
-        # eager localCheckpoint both fire the observation.
-        obs = Observation()
-        e_next = e_next.observe(obs, F.count(F.lit(1)).alias("m_next"))
-        if checkpointer is not None:
-            e_next, labels = checkpointer.save_round(
-                rnd, e_next, labels,
-                metrics={"m": m, "n_nodes": n_before,
-                         "broadcast": do_broadcast, "kind": strategy},
-            )
-            _release_jump_cache(round_labels)  # labels now parquet-backed
-            e.unpersist()
-            # lazy cache over the round parquet — filled by the next round's
-            # first scan (hook); no dedicated staging job
-            e = e_next.persist()
-        else:
-            e_next = e_next.localCheckpoint(eager=True)
-            if first_round:
-                # labels IS round_labels: already persisted + materialized —
-                # a localCheckpoint here would re-copy the n-row table for
-                # nothing; keep the cache alive until the next composition
-                held_labels_cache = round_labels
+            # m_next rides the checkpoint materialization job as an observed
+            # metric instead of a separate count() scan — one fewer job (and
+            # one fewer driver round-trip) per round, a pure serial-fraction
+            # saving (VERDICT r3 #2). Works on both tails: the parquet write
+            # and the eager localCheckpoint both fire the observation.
+            obs = Observation()
+            e_next = e_next.observe(obs, F.count(F.lit(1)).alias("m_next"))
+            if checkpointer is not None:
+                e_next, labels = checkpointer.save_round(
+                    rnd, e_next, labels,
+                    metrics={"m": m, "n_nodes": n_before,
+                             "broadcast": do_broadcast, "kind": strategy},
+                )
+                e.unpersist()
+                # lazy cache over the round parquet — filled by the next
+                # round's first scan (hook); no dedicated staging job
+                e = e_next.persist()
             else:
-                labels = labels.localCheckpoint(eager=True)
-                _release_jump_cache(round_labels)
-                if held_labels_cache is not None:
-                    _release_jump_cache(held_labels_cache)
-                    held_labels_cache = None
-            e.unpersist()
-            # the eager localCheckpoint already stored every partition; a
-            # second persist()+count() here would copy the table again
-            e = e_next
-        m_next = int(obs.get["m_next"])
-        metrics.add(
-            round=rnd, kind=f"{strategy}_superstep", m=m, m_next=m_next,
-            n_nodes=n_before, wall_sec=time.time() - t0,
-            edges_per_sec=m / max(time.time() - t0, 1e-9),
-            broadcast=do_broadcast, n_heavy_hitters=len(heavy),
-            hub_source=hub_source,
-        )
-        if strategy == "boruvka":
-            n_prev = n_before  # true node count of the contracted graph
-        m = m_next
+                e_next = e_next.localCheckpoint(eager=True)
+                if not first_round:
+                    labels = labels.localCheckpoint(eager=True)
+                e.unpersist()
+                # the eager localCheckpoint already stored every partition; a
+                # second persist()+count() here would copy the table again
+                e = e_next
+            m_next = int(obs.get["m_next"])
+            metrics.add(
+                round=rnd, kind=f"{strategy}_superstep", m=m, m_next=m_next,
+                n_nodes=n_before, wall_sec=time.time() - t0,
+                edges_per_sec=m / max(time.time() - t0, 1e-9),
+                broadcast=do_broadcast, n_heavy_hitters=len(heavy),
+                hub_source=hub_source,
+            )
+            if strategy == "boruvka":
+                n_prev = n_before  # true node count of the contracted graph
+            m = m_next
+
+        if comp_track:
+            r, n = roots
+            comp_count = r if comp_count is None else r + comp_count - n
+        if labels is round_labels:
+            # round 0 without a checkpointer: labels IS the cached jump
+            # output — a localCheckpoint would re-copy the n-row table for
+            # nothing; keep the cache alive until the next composition
+            held_labels_cache = round_labels
+        else:
+            # labels are materialized (localCheckpoint or parquet): drop
+            # every cache they were composed from
+            _release_jump_cache(round_labels)
+            _release_jump_cache(held_labels_cache)
+            held_labels_cache = None
 
     if labels is None:
         # no edges at all -> empty labeling
         labels = spark.createDataFrame([], schema="node long, comp long")
         if comp_track:
             metrics.n_components = 0
-    elif comp_track and m == 0 and comp_count is not None:
+    elif comp_track and m == 0:
         # converged (graph emptied or finish kernel ran): the bookkeeping
         # equals countDistinct(comp) of the returned table — exact, free
         metrics.n_components = comp_count

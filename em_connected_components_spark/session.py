@@ -13,6 +13,17 @@ import os
 
 from pyspark.sql import SparkSession
 
+from .tuning import driver_memory_for
+
+
+def _driver_memory() -> str:
+    explicit = os.environ.get("SPARK_DRIVER_MEMORY")
+    if explicit:
+        return explicit
+    # physical RAM in kB: the same figure as /proc/meminfo's MemTotal
+    mem_total_kb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 10
+    return driver_memory_for(mem_total_kb)
+
 
 def get_spark(
     app_name: str = "em_connected_components_spark",
@@ -25,6 +36,8 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
     ``shuffle_partitions`` defaults to the local core count — the single most
     important local-mode knob (200 default over-parallelizes small data).
+    ``spark.driver.memory`` is ``$SPARK_DRIVER_MEMORY`` when set, else 40% of
+    physical RAM (tuning.driver_memory_for); ``extra_conf`` overrides both.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if master is None:
@@ -56,7 +69,7 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", _driver_memory())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

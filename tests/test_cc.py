@@ -109,10 +109,12 @@ def test_local_vs_distributed_pointer_jump(spark):
 
 def test_targets_reduced_jump_agrees(spark):
     # the targets-reduced jump (solve the comp-closure in one kernel task,
-    # apply with one probe join) must equal plain path doubling — including
-    # on a deep chain, where every node is also a target
+    # apply with one probe join) and the chained broadcast probes must equal
+    # plain path doubling — including on a deep chain, where every node is
+    # also a target
     from em_connected_components_spark.plans.connected_components import (
         _pointer_jump,
+        _pointer_jump_chained,
         _pointer_jump_targets,
         _release_jump_cache,
     )
@@ -122,7 +124,7 @@ def test_targets_reduced_jump_agrees(spark):
         [(i, max(i - 1, 0)) for i in range(20)], schema="node long, comp long"
     )
     star = spark.createDataFrame(
-        [(i, 0) for i in range(50)] + [(0, 0)], schema="node long, comp long"
+        [(i, 0) for i in range(50)], schema="node long, comp long"
     )
     from em_connected_components_spark.plans.connected_components import (
         _hook_parents,
@@ -134,11 +136,21 @@ def test_targets_reduced_jump_agrees(spark):
 
     for parents in (chain, star, forest):
         want = sorted(map(tuple, _pointer_jump(parents).collect()))
+        assert len(want) == parents.count()  # one root label per node
         targets = parents.select(F.col("comp").alias("node")).distinct()
-        for bcast in (True, False):
-            got = _pointer_jump_targets(
-                parents, targets, broadcast_resolved=bcast
-            )
+        plans = [
+            lambda: _pointer_jump_targets(
+                parents, targets, broadcast_resolved=True
+            ),
+            lambda: _pointer_jump_targets(
+                parents, targets, broadcast_resolved=False
+            ),
+            # the chain is deeper than 8 probes x 2 passes, so it also takes
+            # the chained plan's path-doubling fallback
+            lambda: _pointer_jump_chained(parents, targets),
+        ]
+        for plan in plans:
+            got = plan()
             assert sorted(map(tuple, got.collect())) == want
             _release_jump_cache(got)
 
@@ -205,36 +217,18 @@ def test_metrics_and_convergence(spark):
         assert r["wall_sec"] > 0
         if r["kind"] == "boruvka_superstep":
             assert r["m_next"] < r["m"]  # monotone edge shrink
-
-
-@pytest.mark.parametrize("small_threshold", [
-    # this gilbert's measured round profile: m=[3000,1087,334,51],
-    # hook-parent t_est~[1600,440,75,..]. The fuse fires when
-    # t_est <= threshold < m, so:
-    2500,  # fires on round 0 — labels still None
-    700,   # fires on round 1 — exercises the compose-with-prior-labels path
-])
-def test_fused_finish_agrees(spark, small_threshold):
-    # opt-in fused finish (contract piped straight into the one-task kernel,
-    # BENCH/fuse_ab.json) must produce the identical partition as the default
-    # unfused tail — both when it fires on round 0 and on a later round.
-    edges = canonicalize(gen.gilbert(spark, n=4000, avg_degree=1.5, seed=7))
-    from em_connected_components_spark.plans.connected_components import (
-        CCMetrics,
+    # every record carries the keys the benchmark reads; a run straight to
+    # the finish kernel supplies the finish record
+    _, fin = connected_components_metrics(
+        gen.path(spark, 200), small_graph_threshold=10**9
     )
-
-    metrics = CCMetrics()
-    fused = connected_components(
-        edges, small_graph_threshold=small_threshold,
-        pre_canonicalized=True, fuse_finish=True, metrics=metrics,
-    )
-    plain = connected_components(
-        edges, small_graph_threshold=small_threshold, pre_canonicalized=True,
-    )
-    assert _partition(fused) == _partition(plain)
-    _assert_star_map(fused)
-    # the fused route must actually have fired, else this test is vacuous
-    assert any(r.get("fused_finish") for r in metrics.rounds)
+    assert [r["kind"] for r in fin.rounds] == ["unionfind_finish"]
+    step_keys = {"kind", "m", "m_next", "n_nodes", "wall_sec", "broadcast",
+                 "n_heavy_hitters", "hub_source"}
+    for r in metrics.rounds + fin.rounds:
+        want = step_keys if r["kind"] == "boruvka_superstep" else {
+            "kind", "m", "wall_sec"}
+        assert want <= r.keys(), (r["kind"], want - r.keys())
 
 
 @pytest.mark.parametrize(
@@ -263,7 +257,7 @@ def test_n_components_metric_exact(spark, maker, small_threshold):
     assert metrics.n_components == want
 
 
-def test_n_components_metric_fused_and_star(spark):
+def test_n_components_metric_star(spark):
     from em_connected_components_spark.plans.connected_components import (
         CCMetrics,
         connected_components,
@@ -271,14 +265,6 @@ def test_n_components_metric_fused_and_star(spark):
     from em_connected_components_spark.plans.policy import Policy
 
     edges = canonicalize(gen.gilbert(spark, n=4000, avg_degree=1.5, seed=7))
-    # fused finish path
-    m1 = CCMetrics()
-    lbl = connected_components(
-        edges, small_graph_threshold=700, pre_canonicalized=True,
-        fuse_finish=True, metrics=m1,
-    )
-    assert any(r.get("fused_finish") for r in m1.rounds)
-    assert m1.n_components == lbl.select("comp").distinct().count()
     # star-contraction rounds mixed in via an always-star policy
     m2 = CCMetrics()
     pol = Policy(star_density=1e9, small_graph_edges=0)

@@ -8,6 +8,7 @@ import pytest
 from em_connected_components_spark.tuning import (
     BROADCAST_ROWS_CAP,
     broadcast_row_bound,
+    driver_memory_for,
     parse_mem_bytes,
 )
 
@@ -20,6 +21,15 @@ def test_parse_mem_bytes():
     assert parse_mem_bytes("1024") == 1024
     with pytest.raises(ValueError):
         parse_mem_bytes("lots")
+
+
+def test_driver_memory_for_physical_ram():
+    # 40% of MemTotal in whole GiB, floored at 1g
+    assert driver_memory_for(16479424) == "6g"  # 15.7 GiB machine
+    assert driver_memory_for(64 << 20) == "25g"
+    assert driver_memory_for(4 << 20) == "1g"
+    assert driver_memory_for(1 << 20) == "1g"  # 0.4 GiB -> the 1g floor
+    assert driver_memory_for(0) == "1g"
 
 
 def test_broadcast_row_bound_memory_model(spark):
